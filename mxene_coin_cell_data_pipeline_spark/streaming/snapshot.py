@@ -6,11 +6,28 @@ snapshot (the streaming form of the batch ``o07`` latest-by-key
 compaction). ``foreachBatch`` is the right surface because the merge is
 a BATCH join/window against existing state on storage — bigger than
 executor memory is fine, no streaming-state store involvement, and the
-sink stays queryable between batches.
+sink stays queryable between batches. Three runners share the loop:
+``run_stream_latest_snapshot`` (latest row per key),
+``run_stream_agg_snapshot`` (additive count/sum per key) and
+``run_stream_histogram_snapshot`` (additive per-(key, bin) counts).
 
-Without an ACID table format the swap is the classic tmp-dir + rename
-(atomic on one filesystem); on Delta/Iceberg the body of ``_merge``
-becomes a single MERGE INTO and the rest is unchanged.
+Cost model (``_delta_merge``): a micro-batch whose optimizer size
+estimate is under ``spark.sql.autoBroadcastJoinThreshold`` broadcasts
+its keys; the state rows it touches (a null-safe broadcast semi-join)
+are combined with it, and the untouched rows pass through a broadcast
+anti-join with no shuffle. Shuffle and sort therefore grow with the
+batch; only the parquet rewrite of the snapshot grows with the state.
+A batch over the threshold runs the same combine over the whole state.
+
+Publishing without an ACID table format (``_publish``): the merged
+snapshot is written to ``<dir>.tmp``, the live directory is renamed to
+``<dir>.old``, ``<dir>.tmp`` is renamed to the live name, and
+``<dir>.old`` is deleted. A crash between the two renames leaves the
+previous snapshot in ``<dir>.old``; every merge first restores it
+(``_recover``), so the next batch merges into the previous snapshot,
+not into nothing. Readers open ``<dir>`` as a plain parquet directory;
+between the two renames it is briefly absent. On Delta/Iceberg the
+merge becomes a single MERGE INTO and the rest is unchanged.
 
 Determinism contract (what the oracle checks): latest-per-key under a
 TOTAL version order (ts desc, event_id desc) is independent of how the
@@ -21,10 +38,14 @@ at once give the same final snapshot.
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
+from functools import reduce
+from operator import and_
+from typing import Callable
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 #: Marker file carrying the last-applied foreachBatch batch_id, stored
 #: INSIDE the snapshot directory so the tmp-dir rename swaps data and
@@ -66,16 +87,90 @@ def _atomic_swap(
     ckpt_id: str | None = None,
 ) -> None:
     """Write ``merged`` to ``<dir>.tmp`` (plus the batch marker when
-    ``batch_id`` is given) and rename over the live snapshot — atomic
-    on one filesystem, so readers always see a complete snapshot."""
+    ``batch_id`` is given) and publish it as the live snapshot, so
+    readers never see a partly written snapshot."""
     tmp = snapshot_dir + ".tmp"
     merged.write.mode("overwrite").parquet(tmp)
     if batch_id is not None:
         with open(os.path.join(tmp, _META), "w") as f:
             f.write(json.dumps({"ckpt": ckpt_id, "batch_id": batch_id}))
+    _publish(tmp, snapshot_dir)
+
+
+def _publish(tmp: str, snapshot_dir: str) -> None:
+    """Replace the live snapshot with the complete directory ``tmp``:
+    live → ``<dir>.old``, ``tmp`` → live, then delete ``<dir>.old``.
+    At every instant one complete snapshot exists under the live name
+    or under ``<dir>.old``; ``_recover`` (run before every merge) puts
+    it back after a crash. Requires ``_recover`` to have run since the
+    last crash, so that no ``<dir>.old`` is in the way."""
+    old = snapshot_dir + ".old"
     if os.path.exists(snapshot_dir):
-        shutil.rmtree(snapshot_dir)
+        os.rename(snapshot_dir, old)
     os.rename(tmp, snapshot_dir)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def _recover(snapshot_dir: str) -> None:
+    """Undo an interrupted ``_publish``. Live missing with ``<dir>.old``
+    present means the crash came between the two renames: the previous
+    snapshot is restored. Both present means only the final delete was
+    lost: the stale copy is removed."""
+    old = snapshot_dir + ".old"
+    if not os.path.exists(old):
+        return
+    if os.path.exists(snapshot_dir):
+        shutil.rmtree(old)
+    else:
+        os.rename(old, snapshot_dir)
+
+
+def _load_state(spark: SparkSession, snapshot_dir: str) -> DataFrame | None:
+    """The live snapshot after crash recovery, or None before the first
+    merge."""
+    _recover(snapshot_dir)
+    if not os.path.exists(snapshot_dir):
+        return None
+    return spark.read.parquet(snapshot_dir)
+
+
+def _delta_merge(
+    current: DataFrame | None,
+    batch: DataFrame,
+    keys: list[str],
+    combine: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """The snapshot after folding ``batch`` into ``current``:
+    ``combine`` (a per-``keys`` reduction such as latest-by-key or an
+    additive groupBy) applied to state ∪ batch.
+
+    When the batch's optimizer size estimate is within
+    ``spark.sql.autoBroadcastJoinThreshold``, only the state rows whose
+    ``keys`` occur in the batch (null-safe, so a NULL key matches a
+    NULL key as it does in ``combine``'s grouping) go through
+    ``combine``; the other rows pass through a broadcast anti-join
+    unshuffled. The result is coalesced to one partition per
+    ``spark.sql.files.maxPartitionBytes`` of state, so the snapshot's
+    file count follows its size and a small merge adds no file.
+    Otherwise ``combine`` runs over the whole state."""
+    if current is None:
+        return combine(batch)
+    conf = batch.sparkSession._jsparkSession.sessionState().conf()
+    limit = conf.autoBroadcastJoinThreshold()
+    if limit < 0 or _size_estimate(batch) > limit:
+        return combine(current.unionByName(batch))
+    probe = F.broadcast(batch.select(*[F.col(k).alias(f"_probe_{k}") for k in keys]))
+    on = reduce(and_, [F.col(k).eqNullSafe(F.col(f"_probe_{k}")) for k in keys])
+    touched = current.join(probe, on, "left_semi")
+    untouched = current.join(probe, on, "left_anti")
+    parts = math.ceil(_size_estimate(current) / conf.filesMaxPartitionBytes())
+    return untouched.unionByName(combine(touched.unionByName(batch))).coalesce(max(1, parts))
+
+
+def _size_estimate(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df`` in bytes (file bytes for
+    a parquet scan; no job runs)."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def merge_latest_by_key(
@@ -107,6 +202,16 @@ def run_stream_latest_snapshot(
     parquet snapshot at ``snapshot_dir`` via per-batch merge + atomic
     directory swap. Each batch rewrites only the snapshot (keys × 1
     row), never the history.
+
+    Cost per micro-batch: a batch under
+    ``spark.sql.autoBroadcastJoinThreshold`` shuffles and sorts only
+    itself plus the snapshot rows whose key it carries; the rest of the
+    snapshot is copied through unshuffled, so the shuffle grows with
+    the batch and only the parquet rewrite grows with the snapshot. A
+    larger batch re-ranks the whole snapshot. The publish renames the
+    live directory to ``<dir>.old`` before moving the new one in; if a
+    crash lands between those renames, the next merge restores
+    ``<dir>.old`` first and merges into the previous snapshot.
 
     ``checkpoint_dir`` makes the loop restartable: committed source
     offsets persist there, so a stopped run re-started with the same
@@ -144,13 +249,12 @@ def _merge_latest_batch(
     re-merging an already-applied batch re-selects the same latest row
     per key — idempotent by construction, exactly-once under replay
     with or without a checkpoint."""
-    spark = batch_df.sparkSession
-    current = (
-        spark.read.parquet(snapshot_dir)
-        if os.path.exists(snapshot_dir)
-        else None
+    merged = _delta_merge(
+        _load_state(batch_df.sparkSession, snapshot_dir),
+        batch_df,
+        [key],
+        lambda rows: merge_latest_by_key(None, rows, key, order_cols),
     )
-    merged = merge_latest_by_key(current, batch_df, key, order_cols)
     _atomic_swap(merged, snapshot_dir)
 
 
@@ -212,11 +316,11 @@ def _merge_agg_batch(
     batches already recorded for THAT lineage in the snapshot's
     ``_LAST_BATCH`` marker; a marker from another lineage is
     ignored."""
+    current = _load_state(batch_df.sparkSession, snapshot_dir)
     if ckpt_id is not None:
         last = _last_applied(snapshot_dir, ckpt_id)
         if last is not None and batch_id <= last:
             return
-    spark = batch_df.sparkSession
     # decimal partials: exact + associative, so the stored totals
     # are identical for ANY micro-batch split of the feed (a double
     # sum would drift by accumulation order as batches re-merge)
@@ -227,18 +331,15 @@ def _merge_agg_batch(
             for c in agg_cols
         ],
     )
-    if os.path.exists(snapshot_dir):
-        current = spark.read.parquet(snapshot_dir)
-        merged = (
-            current.unionByName(partial)
-            .groupBy(key)
-            .agg(
-                F.sum("n").alias("n"),
-                *[F.sum(f"sum_{c}").alias(f"sum_{c}") for c in agg_cols],
-            )
-        )
-    else:
-        merged = partial
+    merged = _delta_merge(
+        current,
+        partial,
+        [key],
+        lambda rows: rows.groupBy(key).agg(
+            F.sum("n").alias("n"),
+            *[F.sum(f"sum_{c}").alias(f"sum_{c}") for c in agg_cols],
+        ),
+    )
     _atomic_swap(
         merged, snapshot_dir,
         batch_id if ckpt_id is not None else None, ckpt_id,
@@ -299,11 +400,11 @@ def _merge_histogram_batch(
     """One histogram-merge step (module-level so the replay guard is
     unit-testable outside a live query); ``ckpt_id`` as in
     ``_merge_agg_batch``."""
+    current = _load_state(batch_df.sparkSession, snapshot_dir)
     if ckpt_id is not None:
         last = _last_applied(snapshot_dir, ckpt_id)
         if last is not None and batch_id <= last:
             return
-    spark = batch_df.sparkSession
     partial = (
         batch_df.select(
             F.col(key),
@@ -312,15 +413,12 @@ def _merge_histogram_batch(
         .groupBy(key, "bin")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    if os.path.exists(snapshot_dir):
-        current = spark.read.parquet(snapshot_dir)
-        merged = (
-            current.unionByName(partial)
-            .groupBy(key, "bin")
-            .agg(F.sum("c").alias("c"))
-        )
-    else:
-        merged = partial
+    merged = _delta_merge(
+        current,
+        partial,
+        [key, "bin"],
+        lambda rows: rows.groupBy(key, "bin").agg(F.sum("c").alias("c")),
+    )
     _atomic_swap(
         merged, snapshot_dir,
         batch_id if ckpt_id is not None else None, ckpt_id,

@@ -507,3 +507,71 @@ def test_d21_keeper_is_aggregate_not_window(spark, sf_dir):
     assert "Window" not in plan, plan[:3000]
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def _paths_to(plan, is_target, above=()):
+    """Every root-to-node path (lists of (nodeName, simpleString)) in a
+    physical plan that ends at a node ``is_target`` accepts."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    here = (*above, (plan.nodeName(), plan.simpleString(100)))
+    out = [list(here)] if is_target(here[-1][1]) else []
+    kids = plan.children()
+    for i in range(kids.size()):
+        out += _paths_to(kids.apply(i), is_target, here)
+    return out
+
+
+def test_snapshot_delta_merge_keeps_state_scan_off_exchanges(spark, tmp_path):
+    """A small batch merges by delta: the snapshot scan reaches an
+    Exchange only through the broadcast semi-join that keeps the rows
+    whose key the batch carries; the untouched rows pass a broadcast
+    anti-join with no Exchange above it. A batch over the broadcast
+    threshold gets the full merge: the whole scan is shuffled."""
+    from mxene_coin_cell_data_pipeline_spark.streaming.snapshot import (
+        _delta_merge,
+        merge_latest_by_key,
+    )
+
+    snap, feed = str(tmp_path / "snap"), str(tmp_path / "feed")
+    spark.range(5000).selectExpr(
+        "id AS k", "timestamp_micros(id) AS ts", "id AS event_id"
+    ).write.parquet(snap)
+    spark.range(50).selectExpr(
+        "id * 100 AS k", "timestamp_micros(10000000 + id) AS ts",
+        "100000 + id AS event_id",
+    ).write.parquet(feed)
+
+    def merged_plan():
+        df = _delta_merge(
+            spark.read.parquet(snap), spark.read.parquet(feed), ["k"],
+            lambda r: merge_latest_by_key(None, r, "k", ["ts", "event_id"]),
+        )
+        return _paths_to(
+            df._jdf.queryExecution().executedPlan(),
+            lambda s: s.startswith("FileScan") and "snap]" in s,
+        )
+
+    paths = merged_plan()
+    joins = []
+    for path in paths:
+        join = next(i for i in range(len(path) - 1, -1, -1)
+                    if path[i][0] == "BroadcastHashJoin")
+        kind = "LeftSemi" if "LeftSemi" in path[join][1] else "LeftAnti"
+        assert f"{kind}, BuildRight" in path[join][1], path[join][1]
+        assert not any("Exchange" in n for n, _ in path[join:]), path
+        if kind == "LeftAnti":
+            assert not any("Exchange" in n for n, _ in path), path
+        joins.append(kind)
+    assert sorted(joins) == ["LeftAnti", "LeftSemi"]
+
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, "1")  # every batch estimate exceeds one byte
+    try:
+        paths = merged_plan()
+    finally:
+        spark.conf.set(conf, saved)
+    (path,) = paths
+    assert any(n == "Exchange" for n, _ in path), path
+    assert not any("Join" in n for n, _ in path), path

@@ -275,6 +275,31 @@ def test_histogram_snapshot_checkpoint_recovery(spark, sf_dir, tmp_path):
     assert got == want
 
 
+def _merge_step(runner, batch_df, batch_id, snap):
+    """One merge step of the named snapshot runner over the events
+    table (additive runners under checkpoint lineage ``ckA``)."""
+    from mxene_coin_cell_data_pipeline_spark.streaming.snapshot import (
+        _merge_agg_batch,
+        _merge_histogram_batch,
+        _merge_latest_batch,
+    )
+
+    if runner == "agg":
+        _merge_agg_batch(
+            batch_df, batch_id, snap, "event_type", {"value": "sum"},
+            ckpt_id="ckA",
+        )
+    elif runner == "histogram":
+        _merge_histogram_batch(
+            batch_df, batch_id, snap, "event_type", "value", 10.0,
+            ckpt_id="ckA",
+        )
+    else:
+        _merge_latest_batch(
+            batch_df, batch_id, snap, "user_id", ["ts", "event_id"]
+        )
+
+
 @pytest.mark.parametrize("runner", ["agg", "histogram", "latest"])
 def test_replayed_batch_is_noop_all_runners(spark, sf_dir, tmp_path, runner):
     """The rename-before-offset-commit crash window, parametrized over
@@ -285,30 +310,12 @@ def test_replayed_batch_is_noop_all_runners(spark, sf_dir, tmp_path, runner):
     runner is idempotent by construction (no guard needed) — both
     roads must land on the same observable."""
     from mxene_coin_cell_data_pipeline_spark.sources.tables import load_table
-    from mxene_coin_cell_data_pipeline_spark.streaming.snapshot import (
-        _merge_agg_batch,
-        _merge_histogram_batch,
-        _merge_latest_batch,
-    )
 
     ev = load_table(spark, sf_dir, "events").limit(500)
     snap = str(tmp_path / "snap")
 
     def merge(batch_df, batch_id):
-        if runner == "agg":
-            _merge_agg_batch(
-                batch_df, batch_id, snap, "event_type", {"value": "sum"},
-                ckpt_id="ckA",
-            )
-        elif runner == "histogram":
-            _merge_histogram_batch(
-                batch_df, batch_id, snap, "event_type", "value", 10.0,
-                ckpt_id="ckA",
-            )
-        else:
-            _merge_latest_batch(
-                batch_df, batch_id, snap, "user_id", ["ts", "event_id"]
-            )
+        _merge_step(runner, batch_df, batch_id, snap)
 
     def snapshot_rows():
         return sorted(
@@ -406,3 +413,90 @@ def test_additive_merge_replayed_batch_is_skipped(spark, sf_dir, tmp_path):
     assert sum(
         r["n"] for r in spark.read.parquet(snap).collect()
     ) == 3 * sum(once.values())
+
+
+def _dirs(tmp_path, **trees):
+    """Create snapshot-like directories holding one ``part-x`` file whose
+    content names the version."""
+    for name, version in trees.items():
+        d = tmp_path / name.replace("_", ".")
+        d.mkdir()
+        (d / "part-x").write_text(version)
+
+
+def _version(path):
+    return (path / "part-x").read_text()
+
+
+def test_publish_and_recover_every_crash_state(tmp_path):
+    """The Spark-free publish steps: live → <dir>.old, tmp → live,
+    delete <dir>.old; and _recover's answer for each state a crash can
+    leave behind."""
+    from mxene_coin_cell_data_pipeline_spark.streaming.snapshot import (
+        _publish,
+        _recover,
+    )
+
+    snap = tmp_path / "snap"
+    # first publish: no live directory yet
+    _dirs(tmp_path, snap_tmp="v1")
+    _publish(str(snap) + ".tmp", str(snap))
+    assert _version(snap) == "v1"
+    # normal publish over a live directory leaves no .old or .tmp
+    _dirs(tmp_path, snap_tmp="v2")
+    _publish(str(snap) + ".tmp", str(snap))
+    assert _version(snap) == "v2"
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["snap"]
+    # crash after the last rename, before the delete: the stale copy goes
+    _dirs(tmp_path, snap_old="v1")
+    _recover(str(snap))
+    assert _version(snap) == "v2"
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["snap"]
+    # crash between the renames: the previous snapshot comes back
+    (snap).rename(tmp_path / "snap.old")
+    _dirs(tmp_path, snap_tmp="v3")
+    _recover(str(snap))
+    assert _version(snap) == "v2"
+    # nothing to recover: a no-op
+    _recover(str(snap))
+    assert _version(snap) == "v2"
+
+
+@pytest.mark.parametrize("runner", ["agg", "histogram", "latest"])
+def test_crash_between_publish_renames_keeps_previous_snapshot(
+    spark, sf_dir, tmp_path, monkeypatch, runner
+):
+    """Fault injection: the rename that moves the new snapshot into
+    place raises. The replayed batch must then merge into the PREVIOUS
+    snapshot — ending where an uninterrupted run ends — instead of
+    rebuilding the snapshot from that batch alone."""
+    from mxene_coin_cell_data_pipeline_spark.sources.tables import load_table
+
+    ev = load_table(spark, sf_dir, "events").limit(500)
+    b0, b1 = ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)
+
+    def rows(snap):
+        return sorted(map(tuple, spark.read.parquet(snap).collect()), key=repr)
+
+    clean = str(tmp_path / "clean")
+    _merge_step(runner, b0, 0, clean)
+    _merge_step(runner, b1, 1, clean)
+
+    snap = str(tmp_path / "snap")
+    _merge_step(runner, b0, 0, snap)
+    real_rename = os.rename
+
+    def crashing_rename(src, dst):
+        if src == snap + ".tmp":
+            raise OSError("injected crash before the new snapshot is in place")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crashing_rename)
+    with pytest.raises(OSError, match="injected crash"):
+        _merge_step(runner, b1, 1, snap)
+    monkeypatch.setattr(os, "rename", real_rename)
+
+    # restart: the offset of batch 1 was never committed, so it replays
+    _merge_step(runner, b1, 1, snap)
+    assert rows(snap) == rows(clean)
+    assert not os.path.exists(snap + ".old")
