@@ -585,85 +585,105 @@ def simhash(
     return agg.select("doc_id", out_bits.alias("simhash_bits"))
 
 
+def _sym_edges(
+    pairs: DataFrame, a: str, b: str, self_loops: bool = False
+) -> DataFrame:
+    """Undirected edge list of ``pairs``: distinct ``(src, dst)`` rows
+    holding both directions of every ``(a, b)`` pair, plus both
+    endpoints' self-loops when ``self_loops`` (the hash-min form).
+
+    Every direction comes out of ONE pass via explode, so an expensive
+    ``pairs`` subtree (a join) runs once. The rows are hash-partitioned
+    on ``src``, the key every caller's rounds join on; that
+    partitioning also satisfies the ``(src, dst)`` dedup, so one
+    exchange serves both. Under adaptive execution a persisted or
+    checkpointed edge list does not report that partitioning, so each
+    round's join still exchanges it once.
+    """
+    dirs = [(a, b), (b, a)] + ([(a, a), (b, b)] if self_loops else [])
+    return (
+        pairs.select(
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(F.col(s).alias("src"), F.col(d).alias("dst"))
+                        for s, d in dirs
+                    ]
+                )
+            ).alias("_e")
+        )
+        .select("_e.src", "_e.dst")
+        .repartition("src")
+        .dropDuplicates(["src", "dst"])
+    )
+
+
+def _hash_min_round(edges: DataFrame, labels: DataFrame | None) -> DataFrame:
+    """One synchronous hash-min round over self-looped ``_sym_edges``:
+    every vertex takes the minimum label over its neighbours ∪ itself.
+
+    ``labels`` is ``(v, lbl)``; ``None`` means round 1, where
+    label₀(v) = v, so the round is ``min(dst)`` per ``src`` over the
+    edge list alone (no join). Later rounds are one
+    edges⋈labels join on ``src`` plus one ``groupBy(dst)``. Returns
+    ``(v, lbl, _chg)``: the self-loop row carries the vertex's old
+    label, so ``_chg`` (the label moved) needs no second join.
+    """
+    if labels is None:
+        return edges.groupBy("src").agg(F.min("dst").alias("lbl")).select(
+            F.col("src").alias("v"),
+            "lbl",
+            (F.col("lbl") != F.col("src")).alias("_chg"),
+        )
+    own = F.when(F.col("src") == F.col("dst"), F.col("lbl"))
+    return (
+        edges.join(labels.withColumnRenamed("v", "src"), "src")
+        .groupBy("dst")
+        .agg(F.min("lbl").alias("lbl"), F.min(own).alias("_old"))
+        .select(
+            F.col("dst").alias("v"),
+            "lbl",
+            (F.col("lbl") != F.col("_old")).alias("_chg"),
+        )
+    )
+
+
 def near_dup_groups(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     """Connected components over near-dup pairs → ``(doc_id, group_id)``.
 
     Turning pairwise matches into keep/drop decisions needs the
     transitive closure (A~B, B~C ⇒ one group). Distributed hash-min
     label propagation: every doc starts labeled with its own id; each
-    round a doc takes the min label among itself and its neighbors;
-    fixpoint after O(component diameter) rounds. group_id = the
-    component's minimum doc_id (the canonical "keeper" under keep-first
-    policy).
+    round a doc takes the min label among itself and its neighbors
+    (one hop per round); fixpoint after O(component diameter) rounds,
+    at most ``max_iter``. group_id = the component's minimum doc_id
+    (the canonical "keeper" under keep-first policy).
 
-    Scale: each round is one join + one aggregation, both keyed by
-    doc_id; ``localCheckpoint`` truncates the growing lineage so round
-    N's plan does not replay rounds 1..N-1 (the standard iterative-
-    algorithm pattern on Spark). Near-dup graphs are sparse and
-    shallow — diameter is small in practice; ``max_iter`` bounds
-    pathological chains.
-
-    Optimization r11 (identical labels): each round is ONE Spark
-    action instead of two — the changed-count rides the label update
-    as an inline flag (the old/new compare needs no self-join: both
-    values are present in the update's own select), and the 1-row
-    ``sum(_chg)`` collect is what materializes the round's
-    checkpoint. Measured: the closure phase of d06/d14/d21 drops
-    half its per-round job count.
+    Scale: the edge list (both directions plus self-loops) is
+    checkpointed once, partitioned on the round's join key; each round
+    is one join plus one aggregation (round 1 only the aggregation),
+    see :func:`_hash_min_round`. The round's labels are checkpointed
+    lazily, so round N's plan does not replay rounds 1..N-1, and the
+    1-row ``sum(_chg)`` collect that decides the fixpoint is the one
+    action that materializes them.
     """
-    fwd = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    edges = (
-        fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        # Checkpoint the edges partitioned by the PER-ROUND JOIN KEY
-        # (optimization r12, the g02/g04 move): hashpartitioning(dst)
-        # satisfies the (src, dst) dedup's clustered distribution, so
-        # the distinct runs with no further exchange, and every round's
-        # edges⋈labels join on dst reads the checkpointed partitions
-        # directly instead of re-exchanging the edge list each round.
-        .repartition("dst")
-        .dropDuplicates(["src", "dst"])
-        .transform(durable_checkpoint)
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
+    edges = durable_checkpoint(
+        _sym_edges(pairs, "doc_a", "doc_b", self_loops=True)
     )
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("group_id", F.col("doc_id"))
-        .transform(durable_checkpoint)
-    )
+    labels = None
     for _ in range(max_iter):
-        nbr_min = (
-            edges.join(
-                labels.select(
-                    F.col("doc_id").alias("dst"), F.col("group_id").alias("_nl")
-                ),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("_nl").alias("_ml"))
-            .select(F.col("src").alias("doc_id"), "_ml")
+        stepped = durable_checkpoint(
+            _hash_min_round(edges, labels), eager=False
         )
-        new_lbl = F.least(
-            F.col("group_id"), F.coalesce(F.col("_ml"), F.col("group_id"))
-        )
-        stepped = (
-            labels.join(nbr_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                # _chg BEFORE the group_id alias: lateral column alias
-                # resolution would otherwise bind the comparison's
-                # group_id to the just-updated value (always false)
-                (new_lbl != F.col("group_id")).cast("int").alias("_chg"),
-                new_lbl.alias("group_id"),
-            )
-            .transform(lambda d: durable_checkpoint(d, eager=False))
-        )
-        changed = int(
-            stepped.agg(F.sum("_chg")).collect()[0][0] or 0
-        )
-        labels = stepped.select("doc_id", "group_id")
-        if changed == 0:
+        changed = stepped.agg(F.sum(F.col("_chg").cast("int"))).collect()
+        labels = stepped.select("v", "lbl")
+        if not changed[0][0]:
             break
-    return labels
+    return labels.select(
+        F.col("v").alias("doc_id"), F.col("lbl").alias("group_id")
+    )
 
 
 #: Knuth multiplicative hash constant / Mersenne-31 modulus for the
@@ -1495,6 +1515,49 @@ def crossdoc_kept_tokens(
     )
 
 
+def _argmax_aggs(score: str, ident: str) -> list[Column]:
+    """Aggregates for argmax(``score``, ties → smaller ``ident``) over
+    an integral score and a non-negative integral id; unpack the
+    aggregated row with :func:`_argmax_id`.
+
+    The argmax travels as ``max`` of ONE DECIMAL(38,0) packing
+    ``score·2⁶³ + (2⁶³−1−id)``, strictly monotone in (score asc,
+    id desc) for any long score and any non-negative id, and bounded
+    by ~8.6·10³⁷ < 10³⁸, so it never overflows. A decimal buffer is
+    mutable, so the aggregate plans as HashAggregate with map-side
+    partials (a ``max(struct)`` would force a SortAggregate).
+    ``min(id)`` rides the same aggregate so a negative id, which would
+    break the order, fails the unpack instead of naming a wrong
+    member.
+    """
+    pack = F.expr(
+        f"CAST(`{score}` AS DECIMAL(20,0)) * 9223372036854775808BD"
+        f" + (9223372036854775807BD - CAST(`{ident}` AS DECIMAL(20,0)))"
+    )
+    return [
+        F.max(pack).alias("_bp"),
+        F.max(score).alias("_bs"),
+        F.min(ident).alias("_bmin"),
+    ]
+
+
+def _argmax_id(ident: str) -> Column:
+    """The id of the :func:`_argmax_aggs` winner: ``max(score)`` is
+    the winner's score, so ``id = 2⁶³−1 − (_bp − _bs·2⁶³)`` exactly.
+    Raises when the group held a negative id."""
+    # 2^63 and 2^63−1 as DECIMAL literals (BD suffix): both exceed
+    # int64, so they cannot ride F.lit
+    unpack = F.expr(
+        "CAST(9223372036854775807BD"
+        " - (_bp - CAST(_bs AS DECIMAL(20,0)) * 9223372036854775808BD)"
+        " AS BIGINT)"
+    )
+    error = f"packed argmax needs non-negative {ident} values"
+    return F.when(
+        F.col("_bmin") < 0, F.raise_error(F.lit(error))
+    ).otherwise(unpack)
+
+
 def quality_keeper_audit(
     groups: DataFrame,
     docs: DataFrame,
@@ -1518,17 +1581,11 @@ def quality_keeper_audit(
     members) − mixer(keeper) after the aggregate, exact in int64.
     State is O(#groups) end to end.
 
-    Argmax encoding (optimization r12, VERDICT r11 item 4): for
-    integral quality columns the argmax travels as ``max`` of ONE
-    DECIMAL(38,0) packing ``q·2⁶³ + (2⁶³−1−id)`` — strictly monotone in
-    the (quality asc, id desc) order for any long q and any
-    non-negative id (the library's id contract), with every value
-    bounded by ~8.6·10³⁷ < 10³⁸, so it never overflows the decimal.
-    A decimal buffer is mutable, so the aggregate plans as
-    HashAggregate with map-side partials; the r11 ``max(struct(q,
-    −id))`` form forced SortAggregate (struct buffers are not mutable),
-    paying an exchange-side sort per round. Non-integral quality
-    columns keep the exact struct form (a decimal cast would truncate).
+    Id contract: for an integral quality column the argmax is the
+    packed DECIMAL of :func:`_argmax_aggs`, which needs non-negative
+    doc ids; a group holding a negative id raises. A non-integral
+    quality column keeps the exact ``max(struct(q, −id))`` form (a
+    decimal cast would truncate).
     """
     q = groups.join(
         docs.select(F.col(id_col).alias("doc_id"), quality_col), "doc_id"
@@ -1541,25 +1598,13 @@ def quality_keeper_audit(
         "bigint",
     )
     if integral:
-        # 2^63 and 2^63−1 as DECIMAL literals (BD suffix): both exceed
-        # int64, so they cannot ride F.lit
-        pack = F.expr(
-            f"CAST(`{quality_col}` AS DECIMAL(20,0)) * 9223372036854775808BD"
-            " + (9223372036854775807BD - CAST(doc_id AS DECIMAL(20,0)))"
-        )
         agg = q.groupBy("group_id").agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.max(F.col(quality_col)).alias("_bq"),
-            F.max(pack).alias("_bp"),
+            *_argmax_aggs(quality_col, "doc_id"),
             F.sum(mix).alias("_sig_all"),
         )
-        # unpack: _bp = bq·2⁶³ + (2⁶³−1 − keeper_id), all exact decimal
-        keeper_id = F.expr(
-            "CAST(9223372036854775807BD"
-            " - (_bp - CAST(_bq AS DECIMAL(20,0)) * 9223372036854775808BD)"
-            " AS BIGINT)"
-        )
-        keeper_q = F.col("_bq")
+        keeper_id = _argmax_id("doc_id")
+        keeper_q = F.col("_bs")
     else:
         best = F.max(
             F.struct(

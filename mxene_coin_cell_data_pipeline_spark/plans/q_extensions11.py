@@ -628,85 +628,54 @@ def _g04_oracle() -> str:
 )
 def g04_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-round synchronous LPA communities on the trade graph,
-    audited per community (size, range, member mixer)."""
+    audited per community (size, range, member mixer). Vertex ids
+    (customer and supplier keys) must be non-negative: the per-node
+    argmax is the packed DECIMAL of ``dedup._argmax_aggs``, and a
+    negative label raises."""
+    from ..functions.dedup import (
+        _argmax_aggs,
+        _argmax_id,
+        _sym_edges,
+        closure_audit,
+    )
+
     li, orders = _ctx(spark, sf_dir, "lineitem", "orders")
-    raw = li.join(orders, F.col("o_orderkey") == F.col("l_orderkey")).select(
-        F.col("o_custkey").alias("src"), F.col("l_suppkey").alias("dst")
-    )
-    # both directions from ONE pass via explode (optimization r11: the
-    # union form re-ran the lineitem⋈orders subtree once per branch)
-    g = (
-        raw.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("src"), F.col("dst")),
-                    F.struct(
-                        F.col("dst").alias("src"), F.col("src").alias("dst")
-                    ),
-                )
-            ).alias("_e")
-        )
-        .select("_e.src", "_e.dst")
-        # Cache the edges partitioned by the per-round join key
-        # (optimization r12, same move as g02): hashpartitioning(src)
-        # still satisfies the (src, dst) dedup, and the three rounds'
-        # edges⋈labels joins read the cache without re-exchanging it.
-        .repartition("src")
-        .dropDuplicates(["src", "dst"])
-        .persist()
-    )
+    raw = li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
+    g = _sym_edges(raw, "o_custkey", "l_suppkey").persist()
     labels = g.select(F.col("src").alias("v")).distinct().withColumn(
         "lbl", F.col("v")
     )
     for _ in range(_G04_ROUNDS):
         cnt = (
             g.join(labels, g["src"] == labels["v"])
-            # ONE exchange per round, not two (optimization r12):
-            # hashpartitioning(dst) satisfies BOTH the (dst, lbl)
-            # count's clustered distribution and the per-node argmax's,
-            # so the count and the argmax aggregate on the same
-            # partitions. The trade — the exchange ships the joined
-            # edge rows instead of (dst, lbl) map-side partials — is
-            # favorable here because early-round labels are nearly
-            # distinct per edge (partials reduce almost nothing); a
-            # corpus where labels pool FAST would prefer the partials.
+            # ONE exchange per round, not two: hashpartitioning(dst)
+            # satisfies BOTH the (dst, lbl) count's clustered
+            # distribution and the per-node argmax's, so the count and
+            # the argmax aggregate on the same partitions. The trade —
+            # the exchange ships the joined edge rows instead of
+            # (dst, lbl) map-side partials — is favorable here because
+            # early-round labels are nearly distinct per edge (partials
+            # reduce almost nothing); a corpus where labels pool FAST
+            # would prefer the partials.
             .repartition("dst")
             .groupBy(F.col("dst"), F.col("lbl"))
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        # Argmax(count DESC, label ASC) as max of ONE DECIMAL(38,0)
-        # pack c·2⁶³ + (2⁶³−1−lbl) — strictly monotone in (c, −lbl)
-        # for any count ≥ 0 and any non-negative label (vertex ids),
-        # bounded < 10³⁸ (optimization r12, the d21 move): a decimal
-        # buffer is mutable so each round's argmax plans as
-        # HashAggregate with map-side partials; the r11 max(struct(c,
-        # −lbl)) form forced a SortAggregate (exchange-side sort) per
-        # round. max(c) is the argmax row's count, so the label unpacks
-        # exactly: lbl = 2⁶³−1 − (pack − max(c)·2⁶³).
-        pack = F.expr(
-            "CAST(c AS DECIMAL(20,0)) * 9223372036854775808BD"
-            " + (9223372036854775807BD - CAST(lbl AS DECIMAL(20,0)))"
-        )
+        # argmax(count DESC, label ASC) per node, one hash aggregate
         labels = (
             cnt.groupBy(F.col("dst").alias("v"))
-            .agg(F.max(pack).alias("_bp"), F.max("c").alias("_bc"))
-            .select(
-                "v",
-                F.expr(
-                    "CAST(9223372036854775807BD - (_bp"
-                    " - CAST(_bc AS DECIMAL(20,0)) * 9223372036854775808BD)"
-                    " AS BIGINT)"
-                ).alias("lbl"),
-            )
+            .agg(*_argmax_aggs("c", "lbl"))
+            .select("v", _argmax_id("lbl").alias("lbl"))
         )
-    mix = ((F.col("v") % F.lit(2147483647)) * F.lit(2654435761)) % F.lit(
-        2147483647
+    groups = labels.select(
+        F.col("v").alias("doc_id"), F.col("lbl").alias("group_id")
     )
-    out = labels.groupBy(F.col("lbl").alias("community")).agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.min("v").alias("min_node"),
-        F.max("v").alias("max_node"),
-        F.sum(mix).alias("member_sig"),
+    out = closure_audit(groups).select(
+        F.col("group_id").alias("community"),
+        F.col("n_docs").alias("n_nodes"),
+        F.col("min_doc_id").alias("min_node"),
+        F.col("max_doc_id").alias("max_node"),
+        "member_sig",
     )
     out = durable_checkpoint(out)
     g.unpersist()

@@ -145,38 +145,11 @@ def g01_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every vertex has outdeg ≥ 1 by construction (edges define the
     vertex set), so no dangling-mass term is needed and float op order
     matches the SQL exactly: sum over incoming (pr/outdeg)."""
+    from ..functions.dedup import _sym_edges
+
     li, orders = _ctx(spark, sf_dir, "lineitem", "orders")
-    raw = (
-        li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(F.col("o_custkey").alias("src"), F.col("l_suppkey").alias("dst"))
-    )
-    # Symmetrize BEFORE the (single) distinct: one exchange on
-    # (src, dst) dedups both directions at once — the earlier
-    # distinct-then-union-then-distinct form paid two. Both directions
-    # emit from ONE pass via explode (optimization r11): the union
-    # form re-ran the lineitem⋈orders subtree once per branch.
-    g = (
-        raw.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("src"), F.col("dst")),
-                    F.struct(
-                        F.col("dst").alias("src"), F.col("src").alias("dst")
-                    ),
-                )
-            ).alias("_e")
-        )
-        .select("_e.src", "_e.dst")
-        # ONE exchange for dedup + degree + every round's join
-        # (optimization r12, the g02/g04 move): hashpartitioning(src)
-        # satisfies the (src, dst) dedup's clustered distribution AND
-        # the degree window's partitioning AND the per-round join key,
-        # so the r11 shape's separate (src, dst) distinct exchange
-        # disappears and the cached relation is already laid out for
-        # the iteration (probe: edge build 1.59s → 1.17s at sf0.1).
-        .repartition("src")
-        .dropDuplicates(["src", "dst"])
-    )
+    raw = li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
+    g = _sym_edges(raw, "o_custkey", "l_suppkey")
     # Degrees via a window over src, not groupBy+join: the window runs
     # on the same src partitioning as the dedup above (no exchange of
     # its own) and drops the separate aggregate + join stages (measured

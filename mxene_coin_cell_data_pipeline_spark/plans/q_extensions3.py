@@ -119,64 +119,22 @@ def t15_bpe_pretokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def g02_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-min connected components (3 synchronous rounds, labels
-    initialized to the vertex id) on the symmetrized trade graph —
-    d06's propagation pattern (functions/dedup.py) on a general graph."""
+    initialized to the vertex id) on the symmetrized trade graph: the
+    near-dup closure's edge build and round
+    (``functions.dedup._sym_edges`` / ``_hash_min_round``) for a fixed
+    3 rounds as one lazy plan, without ``near_dup_groups``' per-round
+    checkpoint and fixpoint collect."""
+    from ..functions.dedup import _hash_min_round, _sym_edges
+
     li, orders = _ctx(spark, sf_dir, "lineitem", "orders")
-    raw = (
-        li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(F.col("o_custkey").alias("src"), F.col("l_suppkey").alias("dst"))
-    )
-    # Self-loops fold the "least(own, neighbor-min)" update into ONE
-    # join+aggregate per round: min over (neighbors ∪ self) ≡
-    # least(l_t(v), min over neighbors) — halves the per-round join
-    # count vs the textbook two-step (measured 8.0s → ~5s at sf0.1).
-    # Both directions AND both endpoints' self-loops emit from ONE
-    # pass via explode (optimization r11: the union form re-ran the
-    # lineitem⋈orders subtree once per branch — every vertex appears
-    # as src or dst of raw, so (s,s) ∪ (d,d) over raw rows is exactly
-    # the per-vertex self-loop set), still one distinct exchange.
-    g = (
-        raw.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("src"), F.col("dst")),
-                    F.struct(
-                        F.col("dst").alias("src"), F.col("src").alias("dst")
-                    ),
-                    F.struct(F.col("src"), F.col("src").alias("dst")),
-                    F.struct(
-                        F.col("dst").alias("src"), F.col("dst").alias("dst")
-                    ),
-                )
-            ).alias("_e")
-        )
-        .select("_e.src", "_e.dst")
-        # Cache the edge list partitioned by the PER-ROUND JOIN KEY
-        # (optimization r12, guide §2.4): hashpartitioning(src)
-        # satisfies the (src, dst) dedup's clustered distribution, so
-        # the distinct still runs with no further exchange — and every
-        # round's edges⋈labels join then reads the cache already
-        # partitioned on src instead of re-exchanging the (src, dst)-
-        # partitioned relation each round (3 edge exchanges → 0, for
-        # one up-front exchange this plan paid anyway). Skew note: the
-        # join requires src clustering regardless, so this moves no
-        # skew boundary; a web-scale supernode needs pre-splitting
-        # upstream either way.
-        .repartition("src")
-        .dropDuplicates(["src", "dst"])
-        .persist()
-    )
-    labels = g.select(F.col("src").alias("v")).distinct().withColumn(
-        "lbl", F.col("v")
-    )
+    raw = li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
+    g = _sym_edges(raw, "o_custkey", "l_suppkey", self_loops=True).persist()
+    labels = None
     for _ in range(3):
-        labels = (
-            g.join(labels, g["src"] == labels["v"])
-            .groupBy(F.col("dst").alias("v"))
-            .agg(F.min("lbl").alias("lbl"))
-        )
-    out = labels.select(F.col("v").alias("node"), F.col("lbl").alias("comp"))
-    out = durable_checkpoint(out)
+        labels = _hash_min_round(g, labels)
+    out = durable_checkpoint(
+        labels.select(F.col("v").alias("node"), F.col("lbl").alias("comp"))
+    )
     g.unpersist()
     return out
 

@@ -522,6 +522,41 @@ def _paths_to(plan, is_target, above=()):
     return out
 
 
+def test_g02_one_join_per_round_and_one_edge_exchange(
+    spark, sf_dir, monkeypatch
+):
+    """g02's 3 hash-min rounds, one lazy plan: round 1 is an aggregate
+    over the edge cache alone; rounds 2-3 are one join each. Between
+    the edge cache and the round operator that reads it (join, or
+    round 1's final aggregate) lies at most one Exchange."""
+    from mxene_coin_cell_data_pipeline_spark.plans import q_extensions3
+
+    # the query ends in a checkpoint: plan the frame handed to it while
+    # the edge cache is registered, unexecuted, so the adaptive plan is
+    # still the whole tree
+    plans = []
+    monkeypatch.setattr(
+        q_extensions3, "durable_checkpoint",
+        lambda df: plans.append(df._jdf.queryExecution().executedPlan()) or df,
+    )
+    QUERIES["g02_connected_components"].spark(spark, sf_dir)
+    (plan,) = plans
+    # round joins are on src (lineitem⋈orders, inside the cache, is not)
+    joins = _paths_to(plan, lambda s: re.match(r"\w*Join \[src#", s))
+    assert len(joins) == 2, [p[-1][1] for p in joins]
+    edge_paths = _paths_to(plan, lambda s: s.startswith("InMemoryTableScan"))
+    assert len(edge_paths) == 3, len(edge_paths)
+    for path in edge_paths:
+        n_exchanges = 0
+        for name, desc in reversed(path[:-1]):
+            if "Join" in name or (
+                name == "HashAggregate" and "partial_" not in desc
+            ):
+                break
+            n_exchanges += "Exchange" in name
+        assert n_exchanges <= 1, path
+
+
 def test_snapshot_delta_merge_keeps_state_scan_off_exchanges(spark, tmp_path):
     """A small batch merges by delta: the snapshot scan reaches an
     Exchange only through the broadcast semi-join that keeps the rows

@@ -7,8 +7,8 @@ with results contractually identical:
   kernel to a pure JVM ``aggregate`` fold (``_apply_merge_expr``);
 - the trainer's audit now derives n_merged/n_tokens_after from the
   fused per-round aggregation (nt = Σ pair counts + Σ cnt);
-- ``near_dup_groups`` fused the changed-count into the label update
-  (one action per closure round);
+- ``near_dup_groups`` runs one join and one action per closure round
+  (the changed-count rides the label update);
 - ``load_table``/``scale_out`` memoize file METADATA keyed by
   (path, mtime, size) — a rewritten file must invalidate.
 """
@@ -16,7 +16,9 @@ with results contractually identical:
 from __future__ import annotations
 
 import os
+import random
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -72,21 +74,79 @@ def test_trainer_audit_identities(spark):
     assert got == want
 
 
-def test_near_dup_groups_fused_round(spark):
-    """A 5-chain plus an isolate converges to min-id labels under the
-    fused one-action-per-round closure."""
+def _union_find_min(pairs):
+    """Component minimum of every vertex in ``pairs``."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+def _random_pairs(seed=11, n_verts=120, n_pairs=90):
+    rng = random.Random(seed)
+    verts = rng.sample(range(10**6), n_verts)
+    return [tuple(rng.sample(verts, 2)) for _ in range(n_pairs)]
+
+
+_CHAIN6 = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)]
+_STAR = [(50, k) for k in range(40, 50)] + [(k, 50) for k in range(51, 56)]
+
+
+@pytest.mark.parametrize(
+    "pairs, max_iter, want",
+    [
+        pytest.param(
+            [(1, 2), (2, 3), (3, 4), (4, 5), (8, 9)], 25,
+            {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 8: 8, 9: 8},
+            id="chain_and_isolate",
+        ),
+        pytest.param([(4, 4), (7, 7)], 25, {4: 4, 7: 7}, id="self_pairs_only"),
+        pytest.param(
+            [(2, 1), (1, 2), (1, 2), (3, 2), (2, 3), (6, 5), (5, 6)], 25,
+            {1: 1, 2: 1, 3: 1, 5: 5, 6: 5},
+            id="duplicate_and_reversed",
+        ),
+        pytest.param(_STAR, 25, _union_find_min(_STAR), id="star"),
+        pytest.param(
+            [(-5, 3), (3, 7), (-8, -9)], 25,
+            {-5: -5, 3: -5, 7: -5, -9: -9, -8: -9},
+            id="negative_ids",
+        ),
+        pytest.param(
+            _random_pairs(), 25, _union_find_min(_random_pairs()),
+            id="random_vs_union_find",
+        ),
+        # one hop per round: g02's 3-round oracle depends on it
+        pytest.param(
+            _CHAIN6, 2, {1: 1, 2: 1, 3: 1, 4: 2, 5: 3, 6: 4},
+            id="chain_two_rounds",
+        ),
+    ],
+)
+def test_near_dup_groups_fused_round(spark, pairs, max_iter, want):
+    """Hash-min closure (one join per round, self-loops in the edge
+    list) gives min-id labels: at the fixpoint the union-find
+    component minimum, and after ``max_iter`` rounds the minimum
+    within ``max_iter`` hops."""
     from mxene_coin_cell_data_pipeline_spark.functions.dedup import (
         near_dup_groups,
     )
 
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (8, 9)],
-        "doc_a long, doc_b long",
-    )
+    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
     got = {
-        r["doc_id"]: r["group_id"] for r in near_dup_groups(pairs).collect()
+        r["doc_id"]: r["group_id"]
+        for r in near_dup_groups(df, max_iter=max_iter).collect()
     }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 8: 8, 9: 8}
+    assert got == want
 
 
 def test_metadata_cache_invalidates_on_rewrite(spark, tmp_path):

@@ -132,6 +132,24 @@ def test_quality_keeper_pack_argmax_exact(spark, quality):
     assert r["n_docs"] == len(members)
 
 
+def test_quality_keeper_negative_id_raises(spark):
+    """The packed argmax orders ids only when they are non-negative: a
+    group holding a negative id must raise, not name a non-member."""
+    from mxene_coin_cell_data_pipeline_spark.functions.dedup import (
+        quality_keeper_audit,
+    )
+
+    ids = [-(1 << 62), (1 << 62) + 1]
+    groups = spark.createDataFrame(
+        [(d, 1) for d in ids], "doc_id long, group_id long"
+    )
+    docs = spark.createDataFrame(
+        list(zip(ids, [1, 2])), "doc_id long, n_chars long"
+    )
+    with pytest.raises(Exception, match="non-negative"):
+        quality_keeper_audit(groups, docs).collect()
+
+
 def test_quality_keeper_hash_aggregates(spark):
     """VERDICT r11 item 4 'done' criterion: integral quality plans as
     HashAggregate (decimal pack buffer is mutable); the struct-argmax
@@ -209,3 +227,22 @@ def test_durable_checkpoint_reliable_mode(spark, tmp_path):
     assert os.path.isdir(ckdir) and any(os.scandir(ckdir)), (
         "reliable checkpoint wrote nothing"
     )
+
+
+def test_durable_checkpoint_honours_configured_dir(spark, tmp_path):
+    """A configured checkpoint dir wins over one the context already
+    has: the reliable checkpoint lands under the configured dir."""
+    import os
+
+    from mxene_coin_cell_data_pipeline_spark.checkpoint import (
+        durable_checkpoint,
+    )
+
+    first, configured = tmp_path / "first", tmp_path / "configured"
+    spark.sparkContext.setCheckpointDir(str(first))
+    spark.conf.set("spark.graft.checkpointDir", str(configured))
+    try:
+        assert durable_checkpoint(spark.range(10)).count() == 10
+    finally:
+        spark.conf.unset("spark.graft.checkpointDir")
+    assert os.path.isdir(configured) and any(os.scandir(configured))

@@ -557,3 +557,20 @@ def test_g04_registered_audit_reconciles(spark, sf_dir):
     # graph is dense enough that 3 rounds flood to one basin, which is
     # correct LPA behavior (the barbell fixture above pins the
     # multi-basin case); the reconciliation above is the contract.
+
+
+def test_g04_negative_vertex_id_raises(spark, tmp_path):
+    """g04's packed per-node argmax needs non-negative vertex ids: a
+    negative customer key must raise, not return a silent audit."""
+    import pandas as pd
+
+    from mxene_coin_cell_data_pipeline_spark.plans.queries import QUERIES
+
+    pd.DataFrame(
+        {"o_orderkey": [1, 2, 3], "o_custkey": [-7, 2, 3]}
+    ).to_parquet(tmp_path / "orders.parquet")
+    pd.DataFrame(
+        {"l_orderkey": [1, 1, 2, 3], "l_suppkey": [10, 11, 10, 11]}
+    ).to_parquet(tmp_path / "lineitem.parquet")
+    with pytest.raises(Exception, match="non-negative"):
+        QUERIES["g04_label_propagation"].spark(spark, str(tmp_path)).collect()
